@@ -1,19 +1,41 @@
 """Comparer stats (SURVEY.md §2.5 A6-A8; reference: analysis/stats.py).
 
-The reference writes 5 comparison CSVs from driver-side pandas; here each
-comparison is ONE distributed aggregation returning a (small) DataFrame —
-written with df.write.csv by the caller. The reference's per-key python
-loop (stats.py:96-107) becomes a groupBy, and the "only if >1 distinct
-value" gate (stats.py:36) stays a cheap countDistinct.
+The reference writes its comparison CSVs from driver-side pandas. They
+hold a few dozen numbers, so here every number of the six reports comes
+from TWO aggregations and the driver writes the files:
+
+- one ``agg`` over the catalogue for the base values: every boolean
+  descriptor's prevalence, the area sum and the row count;
+- one ``cube(sampler, split)`` over the sampling rows with the same
+  aggregates, ``grouping_id()`` and each ratio to its base value. The
+  base values go in as literals, so the ratio keeps Spark's HALF_UP
+  ``round``. That one result holds the overall, per-sampler and
+  per-split values; the reference's "only if >1 distinct value" gate
+  (stats.py:36) is the number of groups under that key's grouping id.
+
+The reshaped rows are written as single-file CSV directories through the
+session's Hadoop FileSystem, so any URI Spark could write still works,
+without a Spark write job (and its commit protocol) per report.
+``compare_bools``, ``compare_sizes`` and ``compare_by_key`` return the
+same rows as small DataFrames.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import csv
+import io
+import math
+from decimal import Decimal
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SURFACE_OF_A_KM2 = 1000 * 1000
+REPORT_KEYS = ("sampler", "split")
+
+_BOOLS = "comparison-bool_descriptors"
+_AREAS = "comparison-areas"
 
 
 def _bool_cols(df: DataFrame) -> list[str]:
@@ -39,105 +61,202 @@ def _area_col() -> F.Column:
     )
 
 
-def _prevalences(df: DataFrame, cols: list[str], label: str) -> DataFrame:
-    """One row per descriptor: avg of the bool cast (A6) — a single agg
-    then an unpivot via stack."""
-    agg = df.agg(
-        *[F.avg(F.col(c).cast("double")).alias(c) for c in cols]
-    )
-    stack = ", ".join(f"'{c}', {c}" for c in cols)
-    return agg.selectExpr(
-        f"stack({len(cols)}, {stack}) as (descriptor, {label})"
-    )
+def _metric_aggs(cols: list[str]) -> list[F.Column]:
+    """Bool prevalences (A6), then total area in km^2 and patch count
+    (A7), in the order of ``cols + ["area_km2", "num_patches"]``."""
+    return [F.avg(F.col(c).cast("double")) for c in cols] + [
+        F.sum(_area_col()),
+        F.count("*"),
+    ]
+
+
+def _aggregate(
+    db: DataFrame, sampling: DataFrame, keys: tuple[str, ...]
+) -> tuple[list[str], dict, dict]:
+    """The two aggregations behind every report. Returns ``(cols, base,
+    groups)``: ``cols`` the bool descriptors, ``base`` metric -> catalogue
+    value, and ``groups`` mapping None to the overall sampling values and
+    each key to its ``[(key value, values), ...]``, where ``values`` maps
+    metric -> (sampling value, ratio). A ratio is null where the base is 0
+    (try_divide), as the reference's pandas division gives NaN."""
+    cols = _bool_cols(db)
+    metrics = cols + ["area_km2", "num_patches"]
+    base = dict(zip(metrics, db.agg(*_metric_aggs(cols)).collect()[0]))
+
+    aggs = _metric_aggs(cols)
+    ratios = [
+        F.round(F.try_divide(a, F.lit(base[m]).cast("double")), 2)
+        for a, m in zip(aggs, metrics)
+    ]
+    grouped = sampling.cube(*keys) if keys else sampling.groupBy()
+    rows = grouped.agg(
+        (F.grouping_id() if keys else F.lit(0)).alias("_gid"),
+        *[a.alias(f"_v{i}") for i, a in enumerate(aggs)],
+        *[r.alias(f"_r{i}") for i, r in enumerate(ratios)],
+    ).collect()
+
+    # grouping_id has one bit per key, the first key highest; a bit is
+    # set when that key is rolled up
+    everything = (1 << len(keys)) - 1
+    alone = {everything ^ (1 << (len(keys) - 1 - i)): k for i, k in enumerate(keys)}
+    groups: dict = {k: [] for k in keys}
+    for r in rows:
+        values = {m: (r[f"_v{i}"], r[f"_r{i}"]) for i, m in enumerate(metrics)}
+        if r["_gid"] == everything:
+            groups[None] = values
+        elif r["_gid"] in alone:
+            key = alone[r["_gid"]]
+            groups[key].append((r[key], values))
+    if None not in groups:  # grouping sets yield no rows for empty input
+        groups[None] = {m: (None, None) for m in metrics}
+        groups[None]["num_patches"] = (0, 0.0 if base["num_patches"] else None)
+    for k in keys:
+        groups[k].sort(key=lambda kv: (kv[0] is not None, kv[0]))
+    return cols, base, groups
+
+
+def _reports(
+    db: DataFrame, sampling: DataFrame, keys: tuple[str, ...]
+) -> dict[str, tuple[T.StructType, list[tuple]]]:
+    """Every report of ``keys`` as (schema, rows), in writing order; a key
+    with <= 1 distinct value has no reports (stats.py:36 gate)."""
+    cols, base, groups = _aggregate(db, sampling, keys)
+    overall = groups[None]
+
+    def comparison_fields(name: str) -> list[T.StructField]:
+        return [
+            T.StructField(name, T.StringType()),
+            T.StructField("df_database", T.DoubleType()),
+            T.StructField("df_sampling", T.DoubleType()),
+            T.StructField("ratio", T.DoubleType()),
+        ]
+
+    def as_double(v):
+        return None if v is None else float(v)
+
+    out = {
+        _BOOLS: (
+            T.StructType(comparison_fields("descriptor")),
+            [(c, base[c], *overall[c]) for c in cols],
+        ),
+        _AREAS: (
+            T.StructType(comparison_fields("metric")),
+            [
+                (m, as_double(base[m]), as_double(overall[m][0]), overall[m][1])
+                for m in ("area_km2", "num_patches")
+            ],
+        ),
+    }
+    for key in keys:
+        if len(groups[key]) <= 1:
+            continue
+        key_field = T.StructField(key, sampling.schema[key].dataType)
+        desc, *rest = comparison_fields("descriptor")
+        out[f"{_BOOLS}-by_{key}"] = (
+            T.StructType([desc, key_field, *rest]),
+            [(c, v, base[c], *vals[c]) for v, vals in groups[key] for c in cols],
+        )
+        out[f"comparison-sizes-by_{key}"] = (
+            T.StructType(
+                [
+                    key_field,
+                    T.StructField("area_km2", T.DoubleType()),
+                    T.StructField("num_patches", T.LongType()),
+                ]
+            ),
+            [(v, vals["area_km2"][0], vals["num_patches"][0]) for v, vals in groups[key]],
+        )
+    return out
+
+
+def _view(sampling: DataFrame, report: tuple[T.StructType, list[tuple]]) -> DataFrame:
+    schema, rows = report
+    return sampling.sparkSession.createDataFrame(rows, schema)
 
 
 def compare_bools(db: DataFrame, sampling: DataFrame) -> DataFrame:
     """Prevalence of every boolean descriptor in db vs sampling + ratio
     (reference: stats.py:52-81). `sampling` must carry the descriptor
     columns (post-extraction join)."""
-    cols = _bool_cols(db)
-    base = _prevalences(db, cols, "df_database")
-    samp = _prevalences(sampling, cols, "df_sampling")
-    return (
-        base.join(samp, "descriptor")
-        .withColumn("ratio", F.round(F.col("df_sampling") / F.col("df_database"), 2))
-    )
+    return _view(sampling, _reports(db, sampling, ())[_BOOLS])
 
 
 def compare_sizes(db: DataFrame, sampling: DataFrame) -> DataFrame:
     """Total area (km^2) + patch counts (reference: stats.py:83-94)."""
-    def sizes(df: DataFrame, label: str) -> DataFrame:
-        agg = df.agg(
-            F.sum(_area_col()).alias("area_km2"),
-            F.count("*").cast("double").alias("num_patches"),
-        )
-        return agg.selectExpr(
-            f"stack(2, 'area_km2', area_km2, 'num_patches', num_patches)"
-            f" as (metric, {label})"
-        )
-
-    return (
-        sizes(db, "df_database")
-        .join(sizes(sampling, "df_sampling"), "metric")
-        .withColumn("ratio", F.round(F.col("df_sampling") / F.col("df_database"), 2))
-    )
+    return _view(sampling, _reports(db, sampling, ())[_AREAS])
 
 
 def compare_by_key(
     db: DataFrame, sampling: DataFrame, key: str
 ) -> DataFrame | None:
-    """Per-key prevalence comparison (reference: stats.py:96-107): the
-    python groupby loop becomes one groupBy(key) aggregation. Returns None
-    when the key has <= 1 distinct value (stats.py:36 gate)."""
-    if sampling.select(key).distinct().count() <= 1:
-        return None
-    cols = _bool_cols(db)
-    base = _prevalences(db, cols, "df_database")
-    per_key = sampling.groupBy(key).agg(
-        *[F.avg(F.col(c).cast("double")).alias(c) for c in cols]
-    )
-    stack = ", ".join(f"'{c}', {c}" for c in cols)
-    samp = per_key.selectExpr(
-        key, f"stack({len(cols)}, {stack}) as (descriptor, df_sampling)"
-    )
-    return (
-        samp.join(F.broadcast(base), "descriptor")
-        .withColumn("ratio", F.round(F.col("df_sampling") / F.col("df_database"), 2))
-        .select("descriptor", key, "df_database", "df_sampling", "ratio")
-    )
+    """Per-key prevalence comparison (reference: stats.py:96-107). Returns
+    None when the key has <= 1 distinct value (stats.py:36 gate)."""
+    report = _reports(db, sampling, (key,)).get(f"{_BOOLS}-by_{key}")
+    return None if report is None else _view(sampling, report)
+
+
+def _csv_text(v) -> str:
+    """A collected value as Spark's CSV writer prints it: null as an
+    empty field, booleans lower-case, doubles as Java's Double.toString
+    (plain for 1e-3 <= |v| < 1e7, else ``d.dddE<n>``)."""
+    if v is None:
+        return ""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if not isinstance(v, float):
+        return str(v)
+    if math.isnan(v):
+        return "NaN"
+    if math.isinf(v):
+        return "Infinity" if v > 0 else "-Infinity"
+    if v == 0 or 1e-3 <= abs(v) < 1e7:
+        return repr(v)  # Python's repr is plain in this range too
+    sign, digits, exp = Decimal(repr(v)).normalize().as_tuple()
+    frac = "".join(map(str, digits[1:])) or "0"
+    return f"{'-' if sign else ''}{digits[0]}.{frac}E{len(digits) - 1 + exp}"
+
+
+def _write_csv_dir(
+    spark: SparkSession, path: str, schema: T.StructType, rows: list[tuple]
+) -> None:
+    """One report as a single-file CSV directory, written from the driver
+    through the session's Hadoop FileSystem: ``part-00000.csv`` (via a
+    hidden temp file and a rename), then ``_SUCCESS``. An existing
+    directory is replaced first, as mode("overwrite") does."""
+    buf = io.StringIO()
+    out = csv.writer(buf, lineterminator="\n", escapechar="\\", doublequote=False)
+    out.writerow(schema.names)
+    out.writerows([_csv_text(v) for v in row] for row in rows)
+
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    target = Path(path)
+    fs = target.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(target):
+        fs.delete(target, True)
+    tmp, part = Path(target, "_part-00000.csv.tmp"), Path(target, "part-00000.csv")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(buf.getvalue().encode("utf-8"))
+    finally:
+        stream.close()
+    if not fs.rename(tmp, part):
+        raise OSError(f"could not rename {tmp} to {part}")
+    fs.create(Path(target, "_SUCCESS"), True).close()
 
 
 def write_comparison_reports(
     db: DataFrame, sampling_extracted: DataFrame, out_dir: str
 ) -> list[str]:
-    """The 5 reference CSVs (K2; reference: stats.py:23-50), written as
-    single-file CSV directories."""
-    written = []
-
-    def write(df: DataFrame | None, name: str) -> None:
-        if df is None:
-            return
-        df.coalesce(1).write.mode("overwrite").option("header", True).csv(
-            f"{out_dir}/{name}"
-        )
-        written.append(name)
-
-    write(compare_bools(db, sampling_extracted), "comparison-bool_descriptors")
-    write(compare_sizes(db, sampling_extracted), "comparison-areas")
-    for key in ("sampler", "split"):
-        write(
-            compare_by_key(db, sampling_extracted, key),
-            f"comparison-bool_descriptors-by_{key}",
-        )
-        bk = compare_by_key(db, sampling_extracted, key)
-        if bk is not None:
-            # sizes by key: counts + area per subset
-            sizes = sampling_extracted.groupBy(key).agg(
-                F.sum(_area_col()).alias("area_km2"),
-                F.count("*").alias("num_patches"),
-            )
-            write(sizes, f"comparison-sizes-by_{key}")
-    return written
+    """The six comparison CSVs (K2; reference: stats.py:23-50) as
+    single-file CSV directories under ``out_dir``; returns the names
+    written. The by-key pair of a key with <= 1 distinct value is
+    skipped."""
+    reports = _reports(db, sampling_extracted, REPORT_KEYS)
+    spark = sampling_extracted.sparkSession
+    for name, (schema, rows) in reports.items():
+        _write_csv_dir(spark, f"{out_dir}/{name}", schema, rows)
+    return list(reports)
 
 
 def gopher_attrition(flags: DataFrame, rules: list[str] | None = None) -> DataFrame:
@@ -196,7 +315,7 @@ def write_gopher_report(
     """The attrition funnel as a single-file CSV directory, same shape
     as write_comparison_reports' outputs."""
     name = "gopher-attrition"
-    gopher_attrition(flags, rules).coalesce(1).write.mode("overwrite").option(
-        "header", True
-    ).csv(f"{out_dir}/{name}")
+    funnel = gopher_attrition(flags, rules)
+    rows = [tuple(r) for r in funnel.collect()]
+    _write_csv_dir(flags.sparkSession, f"{out_dir}/{name}", funnel.schema, rows)
     return name

@@ -14,6 +14,17 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, between 1 and 48 GiB. In local mode the
+    driver JVM is every executor; a heap larger than the machine lets it
+    grow until the kernel's OOM killer ends the session."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "48g"
+    return f"{min(max(ram_mb // 4, 1024), 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "pacasam_spark",
     cores: int | str | None = None,
@@ -71,7 +82,10 @@ def get_spark(
         # row_number()). The Iceberg equivalent at cluster scale is the
         # table's sort-order metadata.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
